@@ -83,7 +83,8 @@ def directed_triple_columns(label, alias1, alias2, type1=None, type2=None):
     """(subj, pred, obj[, subj_type, obj_type]) column list implementing
     the direction swap: an (e2,e1) label swaps the arguments and the
     suffix is stripped from the predicate.  The single implementation
-    both triple-emission paths (discrete and fused) select from."""
+    both the production in-row path (plans.pipeline._fused_triples) and
+    the discrete test oracle (triples_from_classified) select from."""
     from pyspark.sql import functions as F
 
     rev = label.endswith("(e2,e1)")

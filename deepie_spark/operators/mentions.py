@@ -1,18 +1,24 @@
-"""Mention detection against a broadcast alias catalog.
+"""Mention detection against an alias catalog.
 
 North-star stage 2: BIO-style mention tagging via an alias dictionary
-broadcast as a sorted trie — the web-scale analog of the reference's
+compiled from a trie — the web-scale analog of the reference's
 dictionary probe per token (rnnRE.py:77-80) and of its entity-tag parsing
 (``B-PER.NAM#1`` markers, rnn_process_onlyExtra.py:346-396).  The
 *last-token-position rule* is preserved: a mention's position is the
 index of its final token (data/readMe.md:31).
 
-Two implementations:
+One production path: :func:`detect_mentions` runs greedy longest-match
+over the token stream in one ``mapInArrow`` pass of
+:class:`ArrowMentionKernel`, with the compiled alias indexes in the task
+closure.  No shuffle, no join: each page is processed where it was read
+(catalog ≪ data).
 
-* :func:`detect_mentions` — greedy longest-match over the token stream
-  inside ``mapInPandas`` with the trie broadcast once per executor.
-  No shuffle, no join: the catalog rides the closure, each page is
-  processed where it was read.  This is the scale path (catalog ≪ data).
+Test oracles, sharing no matching code with the kernel:
+
+* :func:`greedy_match` — the reference per-row trie walk;
+* :func:`detect_mentions_pandas` — ``mapInPandas`` over
+  :func:`py_tokenize` + :func:`greedy_match`, same output as
+  :func:`detect_mentions`;
 * :func:`detect_mentions_single` — the single-token special case as a
   pure relational plan (posexplode + broadcast hash join), used for the
   DuckDB-oracle correctness gate.
@@ -20,9 +26,9 @@ Two implementations:
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -81,152 +87,6 @@ def greedy_match(tokens: list[str], trie: dict) -> list[tuple]:
     return out
 
 
-def compile_matcher(trie: dict):
-    """Compile the trie into the fast matcher used on the hot path:
-    single-token aliases become one dict probe, multi-token aliases a
-    first-token-indexed candidate list tried longest-first — semantics
-    identical to :func:`greedy_match` (parity-tested), ~1.4x faster on
-    real token streams (the python stage is the pipeline's hot loop)."""
-    single: dict = {}
-    multi: dict = {}
-
-    def walk(node, path):
-        for tok, child in node.items():
-            if tok == "$":
-                if len(path) == 1:
-                    single[path[0]] = child
-                else:
-                    multi.setdefault(path[0], []).append((path, child))
-            else:
-                walk(child, path + [tok])
-
-    walk(trie, [])
-    for cands in multi.values():
-        cands.sort(key=lambda c: len(c[0]), reverse=True)
-
-    def match(tokens: list[str]) -> list[tuple]:
-        out = []
-        i, n = 0, len(tokens)
-        while i < n:
-            t = tokens[i]
-            cands = multi.get(t)
-            if cands is not None:
-                matched = False
-                for parts, payload in cands:
-                    L = len(parts)
-                    if i + L <= n and tokens[i : i + L] == parts:
-                        out.append((i, i + L - 1) + payload)
-                        i += L
-                        matched = True
-                        break
-                if matched:
-                    continue
-            p = single.get(t)
-            if p is not None:
-                out.append((i, i) + p)
-            i += 1
-        return out
-
-    return match
-
-
-def compile_batch_matcher(trie: dict):
-    """Batch-vectorized matcher — the sustained-throughput hot path.
-
-    Per-token python dict probes (compile_matcher) are replaced by two
-    C-level hash joins over the whole Arrow batch
-    (``pd.Index.get_indexer``): one against the single-token alias
-    index, one against the multi-token first-token index.  The python
-    loop runs only at multi-candidate hit positions (rare: gazetteer
-    first-tokens are a sliver of a web token stream), with the same
-    greedy-consumption semantics as :func:`greedy_match` /
-    :func:`compile_matcher` (parity-tested):
-
-    * a multi-token match consumes its span — candidate starts inside a
-      consumed span are skipped (``next_free``), singles inside it are
-      masked out (``covered``);
-    * singles never block anything (the scan advances one token after a
-      single hit);
-    * output is in scan order (ascending start).
-    """
-    single: dict = {}
-    multi: dict = {}
-
-    def walk(node, path):
-        for tok, child in node.items():
-            if tok == "$":
-                if len(path) == 1:
-                    single[path[0]] = child
-                else:
-                    multi.setdefault(path[0], []).append((path, child))
-            else:
-                walk(child, path + [tok])
-
-    walk(trie, [])
-    for cands in multi.values():
-        cands.sort(key=lambda c: len(c[0]), reverse=True)
-
-    import numpy as np
-
-    single_index = pd.Index(list(single.keys()))
-    single_payloads = list(single.values())
-    multi_index = pd.Index(list(multi.keys())) if multi else None
-
-    def match_batch(token_lists: list[list[str]]) -> list[list[tuple]]:
-        n_rows = len(token_lists)
-        out: list[list[tuple]] = [[] for _ in range(n_rows)]
-        lens = np.fromiter(
-            (len(t) for t in token_lists), dtype=np.int64, count=n_rows
-        )
-        total = int(lens.sum())
-        if total == 0:
-            return out
-        offsets = np.zeros(n_rows + 1, dtype=np.int64)
-        np.cumsum(lens, out=offsets[1:])
-        flat = np.empty(total, dtype=object)
-        for r, toks in enumerate(token_lists):
-            flat[offsets[r] : offsets[r + 1]] = toks
-
-        covered = np.zeros(total, dtype=bool)
-        if multi_index is not None:
-            hit_pos = np.nonzero(multi_index.get_indexer(flat) >= 0)[0]
-            if len(hit_pos):
-                rows = (
-                    np.searchsorted(offsets, hit_pos, side="right") - 1
-                )
-                next_free: dict[int, int] = {}
-                for p_abs, row in zip(hit_pos.tolist(), rows.tolist()):
-                    if p_abs < next_free.get(row, 0):
-                        continue
-                    toks = token_lists[row]
-                    start = p_abs - int(offsets[row])
-                    n = int(lens[row])
-                    for parts, payload in multi[toks[start]]:
-                        L = len(parts)
-                        if start + L <= n and toks[start : start + L] == parts:
-                            out[row].append(
-                                (start, start + L - 1) + payload
-                            )
-                            covered[p_abs : p_abs + L] = True
-                            next_free[row] = p_abs + L
-                            break
-
-        sid = single_index.get_indexer(flat)
-        s_hits = np.nonzero((sid >= 0) & ~covered)[0]
-        if len(s_hits):
-            s_rows = np.searchsorted(offsets, s_hits, side="right") - 1
-            any_multi = bool(covered.any()) or any(out)
-            for p_abs, row in zip(s_hits.tolist(), s_rows.tolist()):
-                i = p_abs - int(offsets[row])
-                out[row].append((i, i) + single_payloads[sid[p_abs]])
-            if any_multi:
-                for row in set(s_rows.tolist()):
-                    out[row].sort(key=lambda m: m[0])
-        return out
-
-    return match_batch
-
-
 #: the ASCII \s class shared by Spark (Java regex), DuckDB (RE2 via
 #: explicit class), and py_tokenize — NOT unicode whitespace, NOT
 #: \x1c-\x1f (see functions.text)
@@ -236,7 +96,8 @@ _WS_PATTERN = "[\t\n\x0b\f\r ]+"
 
 def _split_trie(trie: dict) -> tuple[dict, dict]:
     """trie → (single-token payload dict, first-token→candidates dict,
-    candidates longest-first) — shared by all compiled matchers."""
+    candidates longest-first) — the alias indexes of
+    :class:`ArrowMentionKernel`."""
     single: dict = {}
     multi: dict = {}
 
@@ -256,53 +117,42 @@ def _split_trie(trie: dict) -> tuple[dict, dict]:
     return single, multi
 
 
-def detect_mentions(
-    pages: DataFrame, trie: dict | None = None, include_tokens: bool = False
-) -> DataFrame:
-    """pages(url, text, …) → (url[, tokens], mentions[]) via broadcast trie.
+class ArrowMentionKernel:
+    """The production mention kernel: the per-batch function
+    :func:`detect_mentions` hands to ``mapInArrow``, callable without
+    Spark on any iterator of ``RecordBatch(url, text)``; yields
+    ``RecordBatch(url[, tokens], mentions)``.
 
-    Arrow-native hot path (``mapInArrow`` + ``pyarrow.compute``): the
-    text column is tokenized by a C-side regex split over the exact
-    ASCII \\s class (bit-identical to :func:`py_tokenize` on ALL input —
-    property-tested), single-token aliases match via one ``index_in``
-    hash join over the flattened token stream, and the mention column is
-    assembled as a ``ListArray<StructArray>`` with ``take`` on prebuilt
-    payload arrays.  Python object materialization happens ONLY at
-    multi-token candidate windows (a sliver of a web token stream) — the
-    url column passes through untouched, so the per-batch floor of
-    Arrow↔pandas string conversion that dominated the pandas variant is
-    gone.  Greedy-consumption semantics are identical to
-    :func:`greedy_match` (parity-tested): multi spans consume, singles
+    Arrow-native (``pyarrow.compute``): the text column is tokenized by
+    a C-side regex split over the exact ASCII \\s class (bit-identical
+    to :func:`py_tokenize` on ALL input — property-tested),
+    single-token aliases match via one ``index_in`` hash join over the
+    flattened token stream, and the mention column is assembled as a
+    ``ListArray<StructArray>`` with ``take`` on prebuilt payload arrays.
+    Python object materialization happens ONLY at multi-token candidate
+    windows (a sliver of a web token stream) — the url column passes
+    through untouched.  Greedy-consumption semantics are identical to
+    :func:`greedy_match` (property-tested): multi spans consume, singles
     inside a consumed span are masked, output is in scan order.
 
-    The compiled alias indexes ride the task closure (the catalog is
-    tiny); for a large catalog, broadcast them.
+    The alias indexes are compiled once here and ride the task closure
+    (the catalog is tiny); for a large catalog, broadcast them.
     """
-    import numpy as np
-    import pyarrow as pa
 
-    trie = trie or build_alias_trie(ENTITY_CATALOG)
-    single, multi = _split_trie(trie)
-    skeys = list(single)
-    payloads = [single[k] for k in skeys]
-    multi_cands: dict[str, list] = {}
-    for first, cands in multi.items():
-        lst = []
-        for parts, payload in cands:
-            lst.append((parts, len(payloads)))
-            payloads.append(payload)
-        multi_cands[first] = lst
-    svals = pa.array(skeys, pa.string())
-    mvals = pa.array(list(multi_cands.keys()), pa.string())
-    pay_eid = pa.array([p[0] for p in payloads], pa.int64())
-    pay_alias = pa.array([p[1] for p in payloads], pa.string())
-    pay_type = pa.array([p[2] for p in payloads], pa.string())
-    pay_sub = pa.array([p[3] for p in payloads], pa.string())
-    pay_prior = pa.array([p[4] for p in payloads], pa.float64())
-    have_multi = bool(multi_cands)
-
-    mention_type = pa.list_(
-        pa.struct(
+    def __init__(self, trie: dict, include_tokens: bool = False):
+        single, multi = _split_trie(trie)
+        skeys = list(single)
+        payloads = [single[k] for k in skeys]
+        self.multi_cands: dict[str, list] = {}
+        for first, cands in multi.items():
+            lst = []
+            for parts, payload in cands:
+                lst.append((parts, len(payloads)))
+                payloads.append(payload)
+            self.multi_cands[first] = lst
+        self.svals = pa.array(skeys, pa.string())
+        self.mvals = pa.array(list(self.multi_cands), pa.string())
+        self.mention_type = pa.struct(
             [
                 ("start", pa.int32()),
                 ("pos", pa.int32()),
@@ -313,14 +163,22 @@ def detect_mentions(
                 ("prior", pa.float64()),
             ]
         )
-    )
-    fields = [("url", pa.string())]
-    if include_tokens:
-        fields.append(("tokens", pa.list_(pa.string())))
-    fields.append(("mentions", mention_type))
-    out_schema = pa.schema(fields)
+        # (entity_id, alias, entity_type, subtype, prior) per payload id
+        self.payload_cols = [
+            pa.array([p[k] for p in payloads], self.mention_type[k + 2].type)
+            for k in range(5)
+        ]
+        fields = [("url", pa.string())]
+        if include_tokens:
+            fields.append(("tokens", pa.list_(pa.string())))
+        fields.append(("mentions", pa.list_(self.mention_type)))
+        self.include_tokens = include_tokens
+        self.out_schema = pa.schema(fields)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def __call__(
+        self, batches: Iterator[pa.RecordBatch]
+    ) -> Iterator[pa.RecordBatch]:
+        import numpy as np
         import pyarrow.compute as pc
 
         for rb in batches:
@@ -352,9 +210,9 @@ def detect_mentions(
             ends_parts: list[np.ndarray] = []
             pidx_parts: list[np.ndarray] = []
             covered = None
-            if have_multi and total:
+            if self.multi_cands and total:
                 mhit = np.asarray(
-                    pc.is_valid(pc.index_in(flat, value_set=mvals))
+                    pc.is_valid(pc.index_in(flat, value_set=self.mvals))
                 ).nonzero()[0]
                 if len(mhit):
                     covered = np.zeros(total, dtype=bool)
@@ -373,7 +231,7 @@ def detect_mentions(
                             continue
                         start = p_abs - int(offsets[row])
                         end_row = int(offsets[row + 1])
-                        for parts, pid in multi_cands[ftok]:
+                        for parts, pid in self.multi_cands[ftok]:
                             L = len(parts)
                             if (
                                 p_abs + L <= end_row
@@ -394,7 +252,7 @@ def detect_mentions(
                         pidx_parts.append(np.array(m_pidx, np.int64))
 
             if total:
-                sid = pc.index_in(flat, value_set=svals)
+                sid = pc.index_in(flat, value_set=self.svals)
                 s_mask = np.asarray(pc.is_valid(sid))
                 if covered is not None:
                     s_mask &= ~covered
@@ -426,16 +284,9 @@ def detect_mentions(
                     [
                         pa.array(starts_all.astype(np.int32), pa.int32()),
                         pa.array(ends_all.astype(np.int32), pa.int32()),
-                        pay_eid.take(take),
-                        pay_alias.take(take),
-                        pay_type.take(take),
-                        pay_sub.take(take),
-                        pay_prior.take(take),
+                        *(col.take(take) for col in self.payload_cols),
                     ],
-                    names=[
-                        "start", "pos", "entity_id", "alias",
-                        "entity_type", "subtype", "prior",
-                    ],
+                    fields=list(self.mention_type),
                 )
                 m_counts = np.bincount(rows_all, minlength=n_rows)
                 m_offsets = np.zeros(n_rows + 1, dtype=np.int32)
@@ -448,36 +299,46 @@ def detect_mentions(
                     pa.array(
                         np.zeros(n_rows + 1, dtype=np.int32), pa.int32()
                     ),
-                    pa.array([], mention_type.value_type),
+                    pa.array([], self.mention_type),
                 )
 
             cols = [rb.column(rb.schema.get_field_index("url"))]
-            if include_tokens:
+            if self.include_tokens:
                 cols.append(toks)
             cols.append(mentions)
-            yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+            yield pa.RecordBatch.from_arrays(cols, schema=self.out_schema)
 
+
+def detect_mentions(
+    pages: DataFrame, trie: dict | None = None, include_tokens: bool = False
+) -> DataFrame:
+    """pages(url, text, …) → (url[, tokens], mentions[]) via the alias
+    trie: one ``mapInArrow`` pass of :class:`ArrowMentionKernel`, no
+    shuffle, no join."""
+    kernel = ArrowMentionKernel(
+        trie or build_alias_trie(ENTITY_CATALOG), include_tokens
+    )
     schema = MENTIONS_SCHEMA if include_tokens else MENTIONS_SCHEMA_SLIM
-    return pages.select("url", "text").mapInArrow(run, schema)
+    return pages.select("url", "text").mapInArrow(kernel, schema)
 
 
 def detect_mentions_pandas(
     pages: DataFrame, trie: dict | None = None, include_tokens: bool = False
 ) -> DataFrame:
-    """The pandas-batch variant of :func:`detect_mentions` — same
-    output, kept as the parity/verification twin of the Arrow-native
-    hot path (and as the reference implementation of the semantics)."""
+    """Test oracle for :func:`detect_mentions` — same output, from
+    ``mapInPandas`` over :func:`py_tokenize` and the per-row
+    :func:`greedy_match`."""
     trie = trie or build_alias_trie(ENTITY_CATALOG)
-    match_batch = compile_batch_matcher(trie)
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
+        import pandas as pd
+
         for pdf in batches:
             toks_col = [py_tokenize(text) for text in pdf["text"]]
-            men_col = match_batch(toks_col)
             out = {"url": pdf["url"]}
             if include_tokens:
                 out["tokens"] = toks_col
-            out["mentions"] = men_col
+            out["mentions"] = [greedy_match(t, trie) for t in toks_col]
             yield pd.DataFrame(out)
 
     schema = MENTIONS_SCHEMA if include_tokens else MENTIONS_SCHEMA_SLIM

@@ -6,15 +6,21 @@ extract → detect mentions → generate pairs → classify → triples.
 Plan shape at scale (the thing the judge grades):
 
 * **extract** — JVM column expressions, whole-stage codegen, zero Python.
-* **mentions** — one Arrow ``mapInPandas`` pass, broadcast trie, no
-  shuffle: each page stays on the executor that scanned it.
-* **pairs** — array combinatorics inside the row, no shuffle.
-* **classify** — rule stub: broadcast hash join on (type1,type2) —
-  13-row build side; model path: ``mapInPandas`` with broadcast weights
-  (deepie_spark.model.infer) — still no shuffle.
-* **triples** — projection + non-NONE filter; the only shuffle in the
-  whole pipeline is the final write's ``repartition`` by partition key
-  (and any downstream canonicalization).
+* **mentions** — one ``mapInArrow`` pass, the compiled alias indexes in
+  the task closure, no shuffle: each page stays on the executor that
+  scanned it (operators.mentions).
+* **pairs + classify + triples** — one in-row expression
+  (:func:`_fused_triples`): pair generation, the rule lookup and the
+  direction swap, no join, no shuffle; the only shuffle in the whole
+  pipeline is the final write's ``repartition`` by partition key (and
+  any downstream canonicalization).
+
+That is the one production path.  The discrete operators stay here as
+the test oracle the tests and the benchmark compose by hand —
+``mention_pairs`` (operators.pairs) → :func:`classify_pairs_rules`
+(broadcast hash join on (type1,type2), 13-row build side) →
+:func:`triples_from_classified` — fed by the oracle matchers
+``detect_mentions_pandas`` / ``greedy_match``.
 
 ``part_id`` is a deterministic hash bucket of ``url`` — the unit of
 lineage/metrics and of checkpoint/resume (plans.resume).
@@ -29,11 +35,9 @@ from deepie_spark.datagen.catalog import (
     RELATION_RULES,
     build_alias_trie,
     directed_triple_columns,
-    relation_rules_df,
 )
 from deepie_spark.functions.text import extract_text
 from deepie_spark.operators.mentions import detect_mentions
-from deepie_spark.operators.pairs import mention_pairs
 
 N_PARTS = 64  # lineage/resume bucket count (hash of url)
 
@@ -160,16 +164,14 @@ def extract_triples(
     spark: SparkSession,
     pages: DataFrame,
     max_distance: int = 10,
-    fused: bool = True,
     trie: dict | None = None,
 ) -> DataFrame:
     """The full M1 pipeline: pages → triples (rule classifier).
 
-    ``fused=True`` (default) classifies inside the pair-generation
-    expression (no join, smallest explode); ``fused=False`` composes the
-    discrete operators (mention_pairs → broadcast-join classify) — both
-    produce identical rows (asserted in tests).  ``trie`` overrides the
-    broadcast alias trie (e.g. the depth-3 DEEP_ENTITY_CATALOG).
+    Classifies inside the pair-generation expression (no join, smallest
+    explode); the discrete operators composed by hand produce identical
+    rows (asserted in tests).  ``trie`` overrides the alias trie (e.g.
+    the depth-3 DEEP_ENTITY_CATALOG).
     """
     # A production pages table arrives in many splits; the local test
     # parquet is a single tiny file, which would serialize the whole
@@ -182,8 +184,4 @@ def extract_triples(
     mentions = detect_mentions(
         extracted, trie if trie is not None else build_alias_trie()
     )
-    if fused:
-        return _fused_triples(mentions, max_distance)
-    pairs = mention_pairs(mentions, max_distance=max_distance)
-    classified = classify_pairs_rules(pairs, relation_rules_df(spark))
-    return triples_from_classified(classified)
+    return _fused_triples(mentions, max_distance)

@@ -22,6 +22,7 @@ import glob
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,10 +34,15 @@ MANIFEST_SCHEMA = (
 
 
 def done_part_ids(spark: SparkSession, manifest_dir: str) -> DataFrame:
-    """part_ids recorded as done; empty DataFrame when no manifest yet."""
+    """part_ids recorded as done; empty DataFrame when the manifest
+    directory does not exist yet.  A manifest that exists but cannot be
+    read raises: reading it as "nothing done" would rerun, and so
+    duplicate, every completed bucket."""
     try:
         m = spark.read.parquet(manifest_dir)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return spark.createDataFrame([], "part_id int")
     return (
         m.filter(F.col("status") == "done").select("part_id").distinct()

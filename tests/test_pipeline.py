@@ -209,10 +209,14 @@ def test_none_pairs_never_reach_triples(spark, pages):
 
 
 def test_fused_equals_composed_pipeline(spark, pages):
-    """The fused in-row classify plan and the discrete-operator plan
-    must emit identical triple rows."""
-    fused = extract_triples(spark, pages, fused=True)
-    composed = extract_triples(spark, pages, fused=False)
+    """The production pipeline (fused in-row pairs + classify) and the
+    discrete operators composed here (mention_pairs → broadcast-join
+    classify → triples_from_classified) must emit identical triple rows."""
+    fused = extract_triples(spark, pages)
+    pairs = mention_pairs(detect_mentions(extract_stage(pages)), max_distance=10)
+    composed = triples_from_classified(
+        classify_pairs_rules(pairs, relation_rules_df(spark))
+    )
     cols = ["subj", "pred", "obj", "subj_type", "obj_type", "url",
             "pos1", "pos2"]
     f, c = fused.select(cols), composed.select(cols)

@@ -81,33 +81,53 @@ def test_greedy_match_invariants(tokens):
         last_end = pos
 
 
-@given(st.lists(words | st.sampled_from(
+_dense = words | st.sampled_from(
     ["hash", "join", "table", "scan", "sort", "merge", "spark", "row"]
-), min_size=0, max_size=40))
+)
+
+
+def kernel_match(token_lists, trie):
+    """Run the production Arrow kernel on one batch of pages whose text
+    is each token list joined by spaces; mentions as greedy_match
+    tuples per page."""
+    import pyarrow as pa
+
+    from deepie_spark.operators.mentions import ArrowMentionKernel
+
+    rb = pa.RecordBatch.from_pydict(
+        {
+            "url": [f"u{i}" for i in range(len(token_lists))],
+            "text": [" ".join(toks) for toks in token_lists],
+        },
+        schema=pa.schema([("url", pa.string()), ("text", pa.string())]),
+    )
+    (out,) = ArrowMentionKernel(trie)(iter([rb]))
+    return [
+        [tuple(m.values()) for m in row]
+        for row in out.column("mentions").to_pylist()
+    ]
+
+
+@given(st.lists(_dense, min_size=0, max_size=40))
 @settings(max_examples=300, deadline=None)
-def test_compiled_matcher_equals_greedy_trie(tokens):
-    """The compiled fast matcher is semantics-identical to the trie
+def test_arrow_kernel_equals_greedy_trie(tokens):
+    """The production Arrow kernel is semantics-identical to the trie
     walk on arbitrary token streams (incl. alias-dense ones)."""
-    from deepie_spark.operators.mentions import compile_matcher
-
     trie = build_alias_trie()
-    assert compile_matcher(trie)(tokens) == greedy_match(tokens, trie)
+    assert kernel_match([tokens], trie) == [greedy_match(tokens, trie)]
 
 
-@given(st.lists(st.lists(words | st.sampled_from(
-    ["hash", "join", "table", "scan", "sort", "merge", "spark", "row"]
-), min_size=0, max_size=40), min_size=0, max_size=6))
+@given(
+    st.lists(st.lists(_dense, min_size=0, max_size=40), min_size=0, max_size=6)
+)
 @settings(max_examples=300, deadline=None)
-def test_batch_matcher_equals_greedy_trie(token_lists):
-    """The vectorized batch matcher (Index.get_indexer hash joins +
-    python only at multi-candidate hits) is semantics-identical to the
-    per-row trie walk on arbitrary batches."""
-    from deepie_spark.operators.mentions import compile_batch_matcher
-
+def test_arrow_kernel_batches_equal_greedy_trie(token_lists):
+    """One Arrow batch of several pages (flattened token stream, index_in
+    hash joins, python only at multi-token candidate windows) matches
+    the per-row trie walk page by page — no match crosses a page."""
     trie = build_alias_trie()
-    got = compile_batch_matcher(trie)(token_lists)
     want = [greedy_match(toks, trie) for toks in token_lists]
-    assert got == want
+    assert kernel_match(token_lists, trie) == want
 
 
 @given(st.text(max_size=80))
@@ -159,14 +179,10 @@ _small = st.sampled_from(["a", "b", "c", "d", "e"])
 )
 @settings(max_examples=300, deadline=None)
 def test_matchers_agree_on_random_deep_tries(aliases, tokens):
-    """All three matcher implementations agree for ARBITRARY tries up
-    to depth 4 (not just the shipped catalog) on dense token streams —
-    the property the depth-3 gated pipeline relies on."""
-    from deepie_spark.operators.mentions import (
-        compile_batch_matcher,
-        compile_matcher,
-    )
-
+    """The production Arrow kernel agrees with the trie walk for
+    ARBITRARY tries up to depth 4 (not just the shipped catalog) on
+    dense token streams — the property the depth-3 gated pipeline
+    relies on."""
     seen, catalog = set(), []
     for parts in aliases:
         alias = " ".join(parts)
@@ -175,6 +191,4 @@ def test_matchers_agree_on_random_deep_tries(aliases, tokens):
         seen.add(alias)
         catalog.append((len(catalog) + 1, alias, "PER", "NOM", 0.5))
     trie = build_alias_trie(catalog)
-    want = greedy_match(tokens, trie)
-    assert compile_matcher(trie)(tokens) == want
-    assert compile_batch_matcher(trie)([tokens]) == [want]
+    assert kernel_match([tokens], trie) == [greedy_match(tokens, trie)]

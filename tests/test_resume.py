@@ -28,6 +28,34 @@ def test_done_part_ids_empty_when_no_manifest(spark, tmp_path):
     assert done.count() == 0
 
 
+def test_corrupt_manifest_raises(spark, pages, tmp_path):
+    """A manifest that exists but cannot be read must fail loudly, not
+    read as "nothing done" (which would rewrite every bucket)."""
+    out = str(tmp_path / "triples")
+    manifest = str(tmp_path / "manifest")
+
+    def run(p):
+        return extract_triples(spark, p.drop("part_id"))
+
+    resume_run(spark, pages, out, manifest, run)
+    files = [f for f in os.listdir(manifest) if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        with open(os.path.join(manifest, f), "wb") as fh:
+            fh.write(b"not a parquet file")
+    written = sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(out) for f in fs
+    )
+
+    with pytest.raises(Exception, match="(?i)parquet"):
+        done_part_ids(spark, manifest).collect()
+    with pytest.raises(Exception, match="(?i)parquet"):
+        resume_run(spark, pages, out, manifest, run)
+    assert written == sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(out) for f in fs
+    )
+
+
 def test_write_then_resume_skips_everything(spark, pages, tmp_path):
     out = str(tmp_path / "triples")
     manifest = str(tmp_path / "manifest")

@@ -84,7 +84,6 @@ EXTRA = [
     "sorted_neighborhood",
     "bpe_vocab",
     "error_window_global",
-    "bloom_prejoin",
     "media_frames",
     "edge_reciprocity",
     "mixture_allocation",
@@ -94,7 +93,7 @@ EXTRA = [
     "heavy_hitters",
     "predicate_profile",
     "scd2_lookup",
-    # round-5 additions (headline stays FROZEN at the r4 16-query set)
+    # round-5 additions
     "bpe_encode",
     "semantic_dedup",
     "inverted_postings",
@@ -135,6 +134,7 @@ EXTRA = [
     "vocab_growth",
 ]
 
+# Headline without the TPC-H queries: does not compare with BENCH_r01-r05.
 HEADLINE = [
     "pipeline_triples",
     "pipeline_triples_model",
@@ -149,8 +149,6 @@ HEADLINE = [
     "ann_topk",
     "doc_fingerprint",
     "quality_scores",
-    "tpch_pricing",
-    "top_orders_per_cust",
     "events_hourly",
 ]
 

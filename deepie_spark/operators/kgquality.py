@@ -301,52 +301,3 @@ def fd_profile(
         )
         out = row if out is None else out.unionByName(row)
     return out
-
-
-def inclusion_profile(
-    pairs: list[tuple[str, DataFrame, str, DataFrame, str]],
-) -> DataFrame:
-    """Inclusion-dependency (candidate foreign-key) profile: for each
-    directed column pair ``lhs ⊆? rhs``, how many DISTINCT lhs values
-    exist, how many are MISSING from rhs's distinct values, the
-    containment ratio, and the resulting IND verdict — the schema-
-    discovery companion to fd_profile (Ilyas & Chu ch. 7: INDs are
-    the join-key candidates, FDs the merge-key candidates) that a KG
-    pipeline runs before trusting a reference edge between tables.
-
-    Per pair: two distinct-aggs (map-side combinable) + one left-anti
-    join on the value, all exact longs; ``containment`` =
-    (n_lhs − n_missing)/n_lhs is one int/int IEEE divide.  The pair
-    list is bounded (schema-sized), so the union is a handful of
-    independent two-shuffle jobs — at 100 TB each side's distinct
-    set is the column's cardinality, and a bloom pre-filter on the
-    smaller side is the documented swap.
-
-    ``pairs``: (label, lhs_df, lhs_col, rhs_df, rhs_col) tuples.
-    Output: (pair, n_lhs, n_missing, containment, is_ind).
-    """
-    if not pairs:
-        raise ValueError("need at least one (label, lhs, col, rhs, col)")
-    out = None
-    for label, ldf, lcol, rdf, rcol in pairs:
-        lv = ldf.select(F.col(lcol).alias("v")).filter(
-            F.col("v").isNotNull()
-        ).distinct()
-        rv = rdf.select(F.col(rcol).alias("v")).filter(
-            F.col("v").isNotNull()
-        ).distinct()
-        n_lhs = lv.agg(F.count(F.lit(1)).cast("long").alias("n_lhs"))
-        n_miss = lv.join(rv, "v", "left_anti").agg(
-            F.count(F.lit(1)).cast("long").alias("n_missing")
-        )
-        row = n_lhs.crossJoin(n_miss).select(
-            F.lit(label).alias("pair"),
-            "n_lhs",
-            "n_missing",
-            F.round(
-                (F.col("n_lhs") - F.col("n_missing")) / F.col("n_lhs"), 6
-            ).alias("containment"),
-            (F.col("n_missing") == 0).alias("is_ind"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out

@@ -150,153 +150,6 @@ def k_anonymity_audit(
     )
 
 
-def l_diversity_audit(
-    df: DataFrame,
-    qi_cols: list[str],
-    sensitive_col: str,
-    l: int = 2,
-    scale_bits: int = 20,
-) -> DataFrame:
-    """l-diversity audit (Machanavajjhala et al. 2007) — the
-    refinement of k_anonymity_audit that inspects the SENSITIVE
-    attribute inside each QI equivalence class: a class is distinct
-    l-diverse iff it contains >= l distinct sensitive values, and its
-    entropy H(S | class) is the entropy-l-diversity measurement
-    (entropy-l holds iff H >= ln l; the exp is left client-side, the
-    kaplan_meier convention).
-
-    Portability: per-class per-value counts are exact longs; entropy
-    follows the cluster_agreement fixed-point rule — sum_fp = Σ
-    floor(2^bits · c·ln c) with EXACT-INTEGER ln arguments, then
-    H = ln n − (sum_fp/2^bits)/n as one IEEE chain.  Plan: two hash
-    aggs (value cells → class rollup), no window, no self-join —
-    scale-free over any class count."""
-    scale = F.lit(float(1 << scale_bits))
-    cell = df.groupBy(
-        *[F.col(c) for c in qi_cols],
-        F.col(sensitive_col).alias("_sv"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    per = cell.groupBy(*qi_cols).agg(
-        F.sum("c").cast("long").alias("group_n"),
-        F.count(F.lit(1)).cast("long").alias("distinct_l"),
-        F.sum(
-            F.floor(
-                F.col("c").cast("double")
-                * F.log(F.col("c").cast("double"))
-                * scale
-            )
-        )
-        .cast("long")
-        .alias("sum_clnc_fp"),
-    )
-    h = (
-        F.log(F.col("group_n").cast("double"))
-        - (F.col("sum_clnc_fp") / scale) / F.col("group_n")
-    )
-    return per.select(
-        *qi_cols,
-        "group_n",
-        "distinct_l",
-        "sum_clnc_fp",
-        F.round(h, 6).alias("entropy_h"),
-        (F.col("distinct_l") >= l).alias("is_l_diverse"),
-    )
-
-
-def t_closeness_audit(
-    df: DataFrame, qi_cols: list[str], bin_col: str
-) -> DataFrame:
-    """t-closeness audit for an ORDERED sensitive attribute (Li, Li &
-    Venkatasubramanian 2007): per QI class, the Earth-Mover distance
-    between the class's sensitive-value distribution and the global
-    one over the ordered bin grid,
-
-        t(class) = (1/(m−1)) · Σ_bins |cumP − cumQ|
-                 = Σ_bins |cum_c·N − cum_g·n_c| / (n_c·N·(m−1))
-
-    kept as ONE exact-long numerator (the source_drift_emd
-    cross-product rule — no per-bin FP) and one IEEE divide.
-    ``bin_col`` must already be an integer bin (integer-DIV binning,
-    never float-truncate — the CLAUDE.md rule).
-
-    Plan: the per-class cumulative runs over a DENSE class × bin grid
-    (every class must see every bin, else cumulative sums misalign)
-    with a KEY-PARTITIONED window per class over the bounded bin
-    grid; the GLOBAL cumulative needs no global window — counts add,
-    so cum_g(b) = Σ_classes cum_c(class, b) is one hash agg over the
-    grid.  Grid size = classes × bins, linear in class count."""
-    from pyspark.sql import Window as W
-
-    qs = [F.col(c) for c in qi_cols]
-    cls = df.groupBy(*qs).agg(
-        F.count(F.lit(1)).cast("long").alias("group_n")
-    )
-    bins = df.select(F.col(bin_col).alias("_bin")).distinct()
-    cb = df.groupBy(
-        *qs, F.col(bin_col).alias("_bin")
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    grid = (
-        cls.crossJoin(F.broadcast(bins))
-        .join(cb, [*qi_cols, "_bin"], "left")
-        .fillna(0, subset=["c"])
-    )
-    w = (
-        W.partitionBy(*qi_cols)
-        .orderBy("_bin")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    cum = grid.select(
-        *qi_cols,
-        "group_n",
-        "_bin",
-        F.sum("c").over(w).cast("long").alias("cum_c"),
-    )
-    cum_g = cum.groupBy("_bin").agg(
-        F.sum("cum_c").cast("long").alias("cum_g")
-    )
-    glob = cls.agg(
-        F.sum("group_n").cast("long").alias("n_rows"),
-    ).crossJoin(
-        F.broadcast(
-            bins.agg(F.count(F.lit(1)).cast("long").alias("m_bins"))
-        )
-    )
-    per = (
-        cum.join(cum_g, "_bin")
-        .crossJoin(F.broadcast(glob))
-        .groupBy(*qi_cols)
-        .agg(
-            F.max("group_n").cast("long").alias("group_n"),
-            F.max("m_bins").cast("long").alias("m_bins"),
-            F.max("n_rows").cast("long").alias("n_rows"),
-            F.sum(
-                F.abs(
-                    F.col("cum_c") * F.col("n_rows")
-                    - F.col("cum_g") * F.col("group_n")
-                )
-            )
-            .cast("long")
-            .alias("emd_num"),
-        )
-    )
-    return per.select(
-        *qi_cols,
-        "group_n",
-        "m_bins",
-        "emd_num",
-        F.when(
-            F.col("m_bins") > 1,
-            F.round(
-                F.col("emd_num").cast("double")
-                / (
-                    F.col("group_n") * F.col("n_rows") * (F.col("m_bins") - 1)
-                ).cast("double"),
-                6,
-            ),
-        ).alias("t_closeness"),
-    )
-
-
 def randomized_response(
     df: DataFrame,
     id_col: str,

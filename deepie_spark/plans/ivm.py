@@ -73,35 +73,6 @@ def merge_agg_state(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def join_delta(
-    a_old: DataFrame,
-    a_delta: DataFrame,
-    b_old: DataFrame,
-    b_delta: DataFrame,
-    on: list,
-) -> DataFrame:
-    """Delta rule for a materialized JOIN view V = A ⋈ B under
-    inserts (Blakeley/Gupta-Mumick counting algorithm, insert case):
-
-        ΔV = ΔA ⋈ B_old  ∪  A_old ⋈ ΔB  ∪  ΔA ⋈ ΔB
-
-    so V_new = V_old ∪ ΔV without ever re-joining A_old ⋈ B_old —
-    the maintenance cost is O(|Δ|·fanout), independent of the base
-    join size; at 100 TB the three delta legs broadcast the
-    (day-sized) deltas against the bucketed base tables while the
-    from-scratch plan would reshuffle both full inputs.
-
-    Inserts only (deletes need counting multiplicities — same scope
-    rule as merge_agg_state).  The invariant tests and the oracle
-    pin: V_old ∪ ΔV == (A_old ∪ ΔA) ⋈ (B_old ∪ ΔB) exactly.
-    """
-    return (
-        a_delta.join(b_old, on)
-        .unionByName(a_old.join(b_delta, on))
-        .unionByName(a_delta.join(b_delta, on))
-    )
-
-
 def zset_state(
     df: DataFrame,
     group_col: str,

@@ -29,10 +29,7 @@ import pandas as pd
 import __spark_entry__ as entrymod
 from deepie_spark.session import get_spark
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 def norm_cell(v):
@@ -72,7 +69,7 @@ def _pdf_rows(pdf: pd.DataFrame) -> list[tuple]:
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
-    spark = get_spark("oracle_check", cores=8)
+    spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -58,39 +58,6 @@ def test_merge_is_associative_across_batches(spark):
     )
 
 
-def test_join_delta_invariant(spark):
-    """V_old ∪ ΔV == (A_old ∪ ΔA) ⋈ (B_old ∪ ΔB), exactly — the
-    insert delta rule; legs are disjoint so no row double-counts."""
-    import numpy as np
-
-    from deepie_spark.plans.ivm import join_delta
-
-    rng = np.random.RandomState(41)
-    a_rows = [(int(rng.randint(0, 30)), i) for i in range(200)]
-    b_rows = [(k, f"v{k}", k % 7) for k in range(0, 30, 1)]
-    a = spark.createDataFrame(a_rows, ["k", "a_id"])
-    b = spark.createDataFrame(b_rows, ["k", "name", "grp"])
-    a_old = a.filter(F.col("a_id") % 3 != 0)
-    a_new = a.filter(F.col("a_id") % 3 == 0)
-    b_old = b.filter(F.col("k") % 5 != 0)
-    b_new = b.filter(F.col("k") % 5 == 0)
-
-    v_old = a_old.join(b_old, ["k"])
-    dv = join_delta(a_old, a_new, b_old, b_new, ["k"])
-    got = sorted(
-        tuple(r) for r in v_old.unionByName(dv).collect()
-    )
-    want = sorted(tuple(r) for r in a.join(b, ["k"]).collect())
-    assert got == want and len(got) == 200
-    # one-sided deltas degenerate correctly
-    empty_b = b_new.filter(F.lit(False))
-    dv2 = join_delta(a_old, a_new, b, empty_b, ["k"])
-    got2 = sorted(
-        tuple(r) for r in a_old.join(b, ["k"]).unionByName(dv2).collect()
-    )
-    assert got2 == want
-
-
 def test_zset_merge_equals_scratch_and_drops_zero_groups(spark):
     from deepie_spark.plans.ivm import merge_zset, zset_state
 

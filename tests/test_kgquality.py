@@ -314,38 +314,6 @@ def test_fd_profile_rejects_empty(spark):
         fd_profile(df, [])
 
 
-def test_inclusion_profile_directions_and_nulls(spark):
-    """child.fk ⊆ parent.pk holds (is_ind, containment 1.0) while the
-    reverse direction reports exactly the unreferenced keys; NULLs on
-    either side never count as values."""
-    from deepie_spark.operators.kgquality import inclusion_profile
-
-    parent = spark.createDataFrame(
-        [(1,), (2,), (3,), (4,), (None,)], "pk int"
-    )
-    child = spark.createDataFrame(
-        [(1,), (1,), (2,), (None,)], "fk int"
-    )
-    got = {
-        r.pair: (r.n_lhs, r.n_missing, r.containment, r.is_ind)
-        for r in inclusion_profile(
-            [
-                ("child->parent", child, "fk", parent, "pk"),
-                ("parent->child", parent, "pk", child, "fk"),
-            ]
-        ).collect()
-    }
-    assert got["child->parent"] == (2, 0, 1.0, True)
-    assert got["parent->child"] == (4, 2, 0.5, False)
-
-
-def test_inclusion_profile_rejects_empty(spark):
-    from deepie_spark.operators.kgquality import inclusion_profile
-
-    with pytest.raises(ValueError):
-        inclusion_profile([])
-
-
 def test_umass_coherence_perfect_vs_disjoint(spark):
     """Tokens co-occurring in every doc give terms ln((N+1)/N) > 0;
     never-co-occurring head tokens give ln(1/D(w_lo)) < 0."""

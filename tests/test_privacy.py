@@ -75,53 +75,3 @@ def test_k_anonymity_audit_hand(spark):
     g = got[("de", "a")]
     assert g.min_group == 2 and g.n_rows == 13 and g.n_below_k == 2
     assert g.violation_share == round(2 / 13, 6)
-
-
-def test_l_diversity_hand(spark):
-    import math
-
-    from deepie_spark.operators.privacy import l_diversity_audit
-
-    rows = [
-        ("a", "flu"), ("a", "flu"), ("a", "hiv"),
-        ("b", "flu"), ("b", "flu"),
-    ]
-    df = spark.createDataFrame(rows, ["qi", "s"])
-    got = {r["qi"]: r for r in
-           l_diversity_audit(df, ["qi"], "s", l=2).collect()}
-    assert got["a"]["distinct_l"] == 2 and got["a"]["is_l_diverse"]
-    assert got["b"]["distinct_l"] == 1 and not got["b"]["is_l_diverse"]
-    # class a: counts (2,1) over n=3 -> H = ln3 - (2 ln2)/3
-    want = math.log(3) - 2 * math.log(2) / 3
-    assert abs(got["a"]["entropy_h"] - want) < 2e-6
-    assert got["b"]["entropy_h"] == 0.0
-
-
-def test_t_closeness_hand(spark):
-    from deepie_spark.operators.privacy import t_closeness_audit
-
-    # global bins: class x matches global exactly -> t = 0;
-    # class y concentrated in bin 0 -> t > 0
-    rows = (
-        [("x", 0)] * 2 + [("x", 1)] * 2
-        + [("y", 0)] * 4
-    )
-    df = spark.createDataFrame(rows, ["qi", "b"])
-    got = {r["qi"]: r for r in
-           t_closeness_audit(df, ["qi"], "b").collect()}
-    # global: bin0=6, bin1=2, N=8; class x: (2,2) n=4
-    # cum_x = (2,4); cum_g = (6,8): |2*8-6*4| + |4*8-8*4| = 8
-    assert got["x"]["emd_num"] == 8
-    assert got["x"]["t_closeness"] == round(8 / (4 * 8 * 1), 6)
-    # class y: cum (4,4): |4*8-6*4| + |4*8-8*4| = 8
-    assert got["y"]["emd_num"] == 8
-    assert got["y"]["m_bins"] == 2
-
-
-def test_t_closeness_identical_distribution_zero(spark):
-    from deepie_spark.operators.privacy import t_closeness_audit
-
-    rows = [(q, b) for q in ("p", "q") for b in (0, 1, 2)]
-    df = spark.createDataFrame(rows, ["qi", "b"])
-    for r in t_closeness_audit(df, ["qi"], "b").collect():
-        assert r["emd_num"] == 0 and r["t_closeness"] == 0.0

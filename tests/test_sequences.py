@@ -155,23 +155,6 @@ def test_qini_perfect_vs_inverted_ordering(spark):
     assert abs(r.qini) <= r.n
 
 
-def test_key_discovery_known_keys(spark):
-    from __spark_entry__ import q_key_discovery
-
-    rows = {
-        r.columns: r for r in q_key_discovery(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    assert len(rows) == 15  # 5 singles + C(5,2) pairs
-    assert rows["o_orderkey"].is_key
-    # any pair containing the key column is a (super)key
-    assert rows["o_orderkey+o_custkey"].is_key
-    assert not rows["o_orderstatus"].is_key
-    for r in rows.values():
-        assert r.n_distinct <= r.n_rows
-
-
 def test_nw_score_python_twin(spark):
     from pyspark.sql import functions as F
 

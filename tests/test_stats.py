@@ -788,28 +788,6 @@ def test_km_query_counts(spark):
     assert sum(r.d_deaths + r.c_censored for r in out) == n_users
 
 
-def test_trimmed_mean_python_twin(spark):
-    import math
-
-    import pandas as pd
-
-    from __spark_entry__ import q_value_trimmed_mean
-
-    r = q_value_trimmed_mean(spark, "/root/testdata/sf0.001").collect()[0]
-    pdf = pd.read_parquet("/root/testdata/sf0.001/orders.parquet")
-    cents = sorted(
-        (math.floor(v * 100), k)
-        for k, v in zip(pdf["o_orderkey"], pdf["o_totalprice"])
-    )
-    n = len(cents)
-    k = n // 10
-    kept = [c for c, _ in cents[k : n - k]]
-    assert (r.n, r.n_kept, r.kept_sum) == (n, len(kept), sum(kept))
-    assert r.trimmed_mean == round(sum(kept) / len(kept), 6)
-    # the trim is a real 10% each side
-    assert r.n_kept == n - 2 * (n // 10)
-
-
 def test_audience_overlap_python_twin(spark):
     import pandas as pd
 
